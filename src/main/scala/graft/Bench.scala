@@ -196,8 +196,8 @@ object Bench {
     val total = results.values.map(_._1).filter(_ >= 0).sum
     // "mode" tags the end-sample regime INSIDE canarySec so it survives
     // merge_bench.py's per-leg copy: untagged artifacts predate the
-    // retry-until-stable end sampling and their end samples are only an
-    // upper bound (normalize_bench.py uses their START sample alone)
+    // retry-until-stable end sampling, so their end samples are only an
+    // upper bound and only their START sample describes the window
     val canary =
       s"""{"oneCore":[${num4(canary0._1)},${num4(canary1._1)}],"allCores":[${num4(canary0._2)},${num4(canary1._2)}],"mode":"post-stop-stable","endStable":$endStable,"endSamples":$endSamples}"""
     // Field ORDER is chosen for truncation robustness (r13 verdict item

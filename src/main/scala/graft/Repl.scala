@@ -55,9 +55,7 @@ object Repl {
       .head().getSeq[Double](0).toArray
 
     val ranked = Ranker.recommend(
-        spark, emb, meta, RankQueries.QueryText, qv)
-      .orderBy(col("has_price").desc, col("mmr_pos").asc)
-      .collect()
+        spark, emb, meta, RankQueries.QueryText, qv).collect()
     val titles = meta
       .join(spark.createDataFrame(ranked.map(r => Tuple1(r.getLong(0))).toSeq)
         .toDF("id"), "id")

@@ -391,8 +391,8 @@ object AnalyticsQueries {
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"),
           graft.vector.VectorOps.asDouble(col("embedding")).as("vec"))
-      val exactMax =
-        s.conf.get("spark.graft.hardNegatives.exactMax", "5000").toLong
+      val exactMax = graft.GraftConf
+        .long(s, "spark.graft.hardNegatives.exactMax").getOrElse(5000L)
       val n = Tables.embeddings(s, dir).count()
       val top = if (n > exactMax) {
         // cell count balancing Lloyd training (3·n·k) against the probe
@@ -410,8 +410,7 @@ object AnalyticsQueries {
         // and the delegation logs which value won so an operator learns
         // the knob exists without reading this comment.
         val nprobe = math.max(1,
-          s.conf.getOption("spark.graft.hardNegatives.nprobe")
-            .map(_.toInt)
+          graft.GraftConf.int(s, "spark.graft.hardNegatives.nprobe")
             .getOrElse(graft.similarity.Ivf.defaultNprobe(n)))
         org.slf4j.LoggerFactory.getLogger("graft.q69").warn(
           s"q69 delegating $n vectors to IVF ANN with nprobe=$nprobe " +

@@ -355,12 +355,14 @@ object RelationalQueries {
 
   // Aggregation-based top-k per group — the WINDOW-FREE top-k: rank
   // brands per nation by purchase count via sort_array + slice over a
-  // per-group collected array of (count, brand) structs. Unlike q03/
-  // q32's row_number window (which shuffles and sorts EVERY row), the
-  // state here is bounded by the group's distinct-brand census — at
-  // 100 TB the window form needs a full repartition-sort while this
-  // form partial-aggregates map-side and moves only (group, brand)
-  // counts. Output exploded back to rows.
+  // per-group collected array of (count, brand) structs. q03/q32's
+  // row_number window reaches the same bound another way: Spark plans
+  // its `rank <= k` filter as a WindowGroupLimit that trims each
+  // partition to k rows per group before the exchange. The state here
+  // is the group's whole distinct-brand census (≤ 25 brands), held in
+  // a collect_list buffer that cannot spill — so this form suits small
+  // censuses only; a per-user top-k under skew stays a window (q157).
+  // Output exploded back to rows.
   private def q211: Q = Q("q211_group_topk_agg", (s, dir) => {
     // orders/customer/part are fact-scaled — no broadcast hints; AQE
     // broadcasts when a side fits and shuffle-joins at 100 TB

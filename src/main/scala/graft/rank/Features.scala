@@ -48,11 +48,19 @@ object Features {
   def isClose(a: Column, b: Column): Column =
     abs(a - b) <= lit(1e-8) + lit(1e-5) * abs(b)
 
-  /** Percentile-clipped min-max normalization (rank.py:44-54): clip to
-    * [p1,p99] of the WHOLE input frame, scale to [0,1] with +1e-9 on the
-    * denominator; degenerate spread → constant 0.5. The percentile bounds
-    * are a 2-row scalar aggregate broadcast back over the frame (one
-    * map-side-combinable aggregation, no extra wide shuffle).
+  /** The per-row step of min-max normalization (rank.py:44-54): clip to
+    * [lo, hi], scale to [0,1] with +1e-9 on the denominator; degenerate
+    * spread → constant 0.5.
+    */
+  def clipScale(x: Column, lo: Column, hi: Column): Column =
+    when(isClose(hi, lo), lit(0.5))
+      .otherwise((least(greatest(x, lo), hi) - lo) / (hi - lo + lit(Epsilon)))
+
+  /** Percentile-clipped min-max normalization over a whole frame:
+    * [[clipScale]] against the frame's p1/p99, a 2-value scalar aggregate
+    * broadcast back (map-side-combinable; an unpartitioned window would
+    * funnel every row into one task). The ranker's ≤K candidates, already
+    * in one partition, take window bounds and call [[clipScale]] directly.
     */
   def minMaxNorm(df: DataFrame, inCol: String, outCol: String,
                  lower: Double = 0.01, upper: Double = 0.99): DataFrame = {
@@ -61,12 +69,8 @@ object Features {
     val bounds = df.agg(
       percentile(col(inCol), lit(lower)).as(loName),
       percentile(col(inCol), lit(upper)).as(hiName))
-    val lo = col(loName)
-    val hi = col(hiName)
     df.crossJoin(broadcast(bounds))
-      .withColumn(outCol,
-        when(isClose(hi, lo), lit(0.5))
-          .otherwise((least(greatest(col(inCol), lo), hi) - lo) / (hi - lo + lit(Epsilon))))
+      .withColumn(outCol, clipScale(col(inCol), col(loName), col(hiName)))
       .drop(loName, hiName)
   }
 

@@ -3,21 +3,26 @@ package graft.rank
 import graft.text.{BudgetParser, TextOps}
 import graft.vector.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** The reference's recommendation query re-expressed as one declarative
   * Spark plan (reference: semantic.py:33-52 + rank.py:208-337):
   *
   *   cosine scan → top-K (TakeOrderedAndProject) → broadcast join meta →
-  *   scalar candidate stats (median/σ/percentiles, one map-side-combinable
-  *   aggregate) → feature + blend projection → [collect ≤K rows] → greedy
-  *   MMR → price-presence partition.
+  *   window-scoped candidate stats → feature + blend projection →
+  *   [collect ≤K rows] → greedy MMR → price-presence partition.
   *
-  * Everything before the MMR collect is lazy Catalyst plan: the similarity
-  * scan parallelizes over the embedding table's partitions, the top-K is a
-  * per-partition heap + driver merge (no full sort shuffle), and meta is a
-  * broadcast join. The only driver materialization is the ≤topK candidate
-  * set — identical to the reference's own collect boundary.
+  * Everything before the MMR collect is one lazy plan with no cache. The
+  * top-K is a per-partition heap + one-partition merge, and every
+  * candidate statistic (price median/σ, p1/p99 of popularity and rerank)
+  * is an aggregate over the unpartitioned window of those ≤K rows, which
+  * are already in one partition: no exchange, no second scan. The only
+  * driver materialization is the ≤topK candidate set — the reference's
+  * own collect boundary — and a request leaves no cached state behind.
   */
 object Ranker {
   final case class Config(
@@ -58,42 +63,33 @@ object Ranker {
       .orderBy(desc("sim"), asc("id"))
       .limit(cfg.topK)
 
-    // Persisted: this ≤topK-row frame feeds the price-stats aggregate,
-    // the two min-max percentile aggregates, AND the main projection —
-    // four plan subtrees that would otherwise each replay the full
-    // similarity scan + top-K. At cluster scale this is the canonical
-    // "cache the candidate set" boundary; it is k rows, not corpus rows.
-    val joined = top.join(broadcast(meta), Seq("id"), "left")
+    // Candidate stats over exactly the top-K set, as window aggregates:
+    // price median/σ over non-null prices (rank.py:225-232) and the
+    // p1/p99 clip bounds of popularity and rerank (rank.py:44-54).
+    val all = Window.partitionBy()
+    def pct(c: String, p: Double) = percentile(col(c), lit(p)).over(all)
+    val cands = top.join(broadcast(meta), Seq("id"), "left")
       .withColumn("rerank", lexicalRerank(qTokens, col("title"), col("summary")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // candidate price stats (rank.py:225-232): median/σ over non-null prices
-    // of exactly the top-K set; budget anchor wins when truthy.
-    val budget = BudgetParser.parseBudget(lit(queryText))
-    val stats = joined.agg(
-      median(col("price")).as("__price_median"),
-      stddev_pop(col("price")).as("__price_std"))
-    val withStats = joined.crossJoin(broadcast(stats))
-      .withColumn("__budget", budget)
-      .withColumn("__anchor",
-        when(col("__budget").isNotNull && col("__budget") =!= 0.0, col("__budget"))
-          .otherwise(col("__price_median")))
-
-    val featured = withStats
-      .withColumn("bayes",
-        Features.bayesianRating(col("rating"), col("review_count")) / Features.MaxStarRating)
       .withColumn("pop", Features.popularity(col("review_count")))
-      .withColumn("price_fit",
-        Features.priceFit(col("price"), col("__anchor"), col("__price_std")))
+      .withColumn("budget", BudgetParser.parseBudget(lit(queryText)))
+      .select(col("*"),
+        median(col("price")).over(all).as("price_median"),
+        stddev_pop(col("price")).over(all).as("price_std"),
+        pct("pop", 0.01).as("pop_lo"), pct("pop", 0.99).as("pop_hi"),
+        pct("rerank", 0.01).as("rerank_lo"), pct("rerank", 0.99).as("rerank_hi"))
 
-    val normed = Features.minMaxNorm(
-      Features.minMaxNorm(featured, "pop", "pop_norm"), "rerank", "rerank_norm")
-
-    normed
-      .withColumn("score",
-        round(Features.blend(col("sim"), col("bayes"), col("pop_norm"),
-          col("price_fit"), col("rerank_norm")), cfg.roundScale))
-      .select("id", "sim", "score", "price", "vec")
+    // the budget anchor wins when truthy, else the candidates' median;
+    // a column, so the anchor's many uses share one parsed budget
+    val budget = col("budget")
+    val anchor = when(budget.isNotNull && budget =!= 0.0, budget)
+      .otherwise(col("price_median"))
+    val score = Features.blend(col("sim"),
+      Features.bayesianRating(col("rating"), col("review_count")) / Features.MaxStarRating,
+      Features.clipScale(col("pop"), col("pop_lo"), col("pop_hi")),
+      Features.priceFit(col("price"), anchor, col("price_std")),
+      Features.clipScale(col("rerank"), col("rerank_lo"), col("rerank_hi")))
+    cands.select(col("id"), col("sim"), round(score, cfg.roundScale).as("score"),
+      col("price"), col("vec"))
   }
 
   /** λ=1 degenerate ranking (MMR reduces to plain score order): fully
@@ -111,16 +107,20 @@ object Ranker {
     val scored = scoreCandidates(embeddings, meta, queryText, queryVec, cfg)
     val top = scored.orderBy(desc("score"), asc("id")).limit(cfg.finalK)
       .withColumn("pos",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(desc("score"), asc("id"))).cast("long"))
+        row_number().over(Window.orderBy(desc("score"), asc("id"))).cast("long"))
     top.select(col("id"), col("score"), col("pos"),
         col("price").isNotNull.as("has_price"))
       .orderBy(col("has_price").desc, col("pos").asc)
   }
 
+  private val Recommended =
+    StructType.fromDDL("id BIGINT, score DOUBLE, mmr_pos BIGINT, has_price BOOLEAN")
+
   /** Full MMR ranking: collects the scored top-K (the reference's own
     * driver boundary), runs greedy MMR, reapplies the stable
-    * price-presence partition. Output: (id, score, mmr_pos, has_price).
+    * price-presence partition on the ≤finalK picks. Output: (id, score,
+    * mmr_pos, has_price) in display order, as a local relation — reading
+    * it back runs no Spark job.
     */
   def recommend(
       spark: SparkSession,
@@ -139,14 +139,7 @@ object Ranker {
     val picked = MMR.select(cands.toSeq, cfg.finalK, cfg.lambda)
     val out = picked.zipWithIndex.map { case (c, i) =>
       Row(c.id, c.score, (i + 1).toLong, hasPrice(c.id))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("mmr_pos", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("has_price", org.apache.spark.sql.types.BooleanType)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toList, 1), schema)
-      .orderBy(col("has_price").desc, col("mmr_pos").asc)
+    }.sortBy(!_.getBoolean(3)) // stable: with-price block first
+    spark.createDataFrame(out.asJava, Recommended)
   }
 }

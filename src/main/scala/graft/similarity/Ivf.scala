@@ -250,15 +250,8 @@ object Ivf {
       val qCounts = queries.groupBy("cell").count()
         .as[(Int, Long)].collect().toMap // ≤ k ≤ 4096 rows — driver-bounded
       val confWidth: Option[Int] =
-        spark.conf.getOption("spark.graft.hardNegatives.saltWidth").map { s =>
-          val w =
-            try s.trim.toLong
-            catch { case _: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"spark.graft.hardNegatives.saltWidth must be an integer, got '$s'")
-            }
-          math.min(64L, math.max(1L, w)).toInt
-        }
+        graft.GraftConf.long(spark, "spark.graft.hardNegatives.saltWidth")
+          .map(w => math.min(64L, math.max(1L, w)).toInt)
       val widths: Map[Int, Int] = confWidth match {
         case Some(w) => iCounts.map { case (c, _) => c -> w } // forced global
         case None    => cellSaltWidths(iCounts, qCounts, nprobe)

@@ -60,10 +60,12 @@ class CacheHygieneSpec extends SparkSpec {
   // loop-persisting query)
   // q213/q223: round-4 scopedPersist users; q224: persists the corpus
   // frame but returns a LOCAL result (driver-side power iteration) —
-  // the listener must still release the build-time cache
+  // the listener must still release the build-time cache; q40/q41: the
+  // ranker's candidate stats are window-scoped, so nothing is cached
   for (q <- Seq("q100_triangle_count", "q154_setsim_join",
       "q181_assoc_rules", "q190_label_propagation", "q182_bfs_layers",
-      "q213_substring_dedup", "q223_attribution", "q224_pca_power")) {
+      "q213_substring_dedup", "q223_attribution", "q224_pca_power",
+      "q40_recommend_top10", "q41_recommend_mmr")) {
     test(s"$q leaves no persisted RDDs after its action") {
       isolate() // order-independent: drop table caches AND artifact memos
       assert(awaitNoPersistentRdds(), "pre-existing persistent RDDs: " +
@@ -77,6 +79,18 @@ class CacheHygieneSpec extends SparkSpec {
         s"$q left persisted RDDs: " +
           spark.sparkContext.getPersistentRDDs.values.map(_.name).mkString(", "))
     }
+  }
+
+  test("Ranker.recommend leaves no persisted RDDs after its collect") {
+    isolate()
+    assert(awaitNoPersistentRdds(), "pre-existing persistent RDDs")
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
+    val rows = rank.Ranker.recommend(
+      spark, emb, meta, queries.RankQueries.QueryText, qv).collect()
+    assert(rows.length == 10)
+    assert(awaitNoPersistentRdds(),
+      "recommend left persisted RDDs: " +
+        spark.sparkContext.getPersistentRDDs.values.map(_.name).mkString(", "))
   }
 
   test("an abandoned scope (frame built, never executed) is swept by later scopes") {

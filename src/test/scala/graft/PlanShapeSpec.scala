@@ -13,6 +13,10 @@ class PlanShapeSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Plan traversal that descends into adaptive query stages. */
+  private object AdaptivePlans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def executedPlan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
@@ -37,8 +41,11 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  private def staticPlanOf(df: => org.apache.spark.sql.DataFrame): SparkPlan =
+    staticConf(df.queryExecution.executedPlan)
+
   private def staticPlan(name: String): SparkPlan =
-    staticConf(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+    staticPlanOf(SparkEntry.queries(name)(spark, sf))
 
   private def hasAggregate(p: SparkPlan): Boolean =
     p.collectFirst { case a: BaseAggregateExec => a }.nonEmpty
@@ -65,8 +72,8 @@ class PlanShapeSpec extends SparkSpec {
   /** Single-partition shuffles whose input is raw row-granularity data
     * (no aggregate below them) — the one-task global sort/window.
     */
-  private def rowLevelSinglePartitionShuffles(name: String): Seq[String] = {
-    staticPlan(name).collect {
+  private def rowLevelSinglePartitionShuffles(plan: SparkPlan): Seq[String] = {
+    plan.collect {
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
     }.filterNot(hasAggregate).map(_.toString)
   }
@@ -147,6 +154,37 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan.take(4000))
   }
 
+  test("item-CF bounds its top-5 per user with a WindowGroupLimit") {
+    // the filtered row_number keeps ≤5 rows per user in each task before
+    // the exchange; its sort spills, unlike a collect_list buffer
+    val plan = executedPlan("q157_itemcf_recommend")
+    assert(plan.contains("WindowGroupLimit"), plan.take(4000))
+  }
+
+  test("candidate scoring is one uncached plan with a single broadcast join") {
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
+    // a def: the static-conf check below plans its own fresh frame
+    def scored = rank.Ranker.scoreCandidates(
+      emb, meta, queries.RankQueries.QueryText, qv)
+    val df = scored
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    val plan = executed.toString
+    for (op <- Seq("InMemoryTableScan", "TableCacheQueryStage",
+        "BroadcastNestedLoopJoin", "CartesianProduct"))
+      assert(!plan.contains(op), s"$op in:\n${plan.take(4000)}")
+    // the meta join; the candidate stats are window aggregates, not
+    // scalar aggregates stitched back on
+    val bhj = AdaptivePlans.collect(executed) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+    }
+    assert(bhj.size == 1, plan.take(4000))
+    // the top-K already outputs one partition: the unpartitioned stats
+    // window must not add a single-partition exchange of its own
+    val bad = rowLevelSinglePartitionShuffles(staticPlanOf(scored))
+    assert(bad.isEmpty, s"scoring shuffles raw rows to one partition: $bad")
+  }
+
   test("BM25 pushes the query-term filter into the scan side of tf") {
     val df = SparkEntry.queries("q146_bm25")(spark, sf)
     df.collect()
@@ -202,7 +240,7 @@ class PlanShapeSpec extends SparkSpec {
   test("global rank/cumsum queries never single-partition row-granularity data") {
     for (q <- Seq("q129_weighted_median", "q176_gini_spend",
         "q183_rfm_segments")) {
-      val bad = rowLevelSinglePartitionShuffles(q)
+      val bad = rowLevelSinglePartitionShuffles(staticPlan(q))
       assert(bad.isEmpty,
         s"$q shuffles raw rows to one partition: ${bad.map(_.take(300))}")
     }
